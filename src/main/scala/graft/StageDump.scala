@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-Spark-stage shuffle profiler for a single gate (dev tool, not part
   * of the driver contract): runs the named gate `passes` times in one JVM,
-  * recording every completed stage's shuffle read/write bytes + task count
-  * + callsite, one file per pass under /tmp. Diffing pass files identifies
+  * recording every completed stage's shuffle read/write bytes and records
+  * + task count + callsite, one file per pass under /tmp. Diffing pass files identifies
   * WHICH physical stage's volume moved when a gate's total shuffle bytes
   * are nondeterministic — this is the instrument that diagnosed the
   * round-14 `x_corpus_pipeline` flip to AQE exchange-reuse races (see
@@ -39,8 +39,10 @@ object StageDump {
         val m = si.taskMetrics
         val r = m.shuffleReadMetrics.totalBytesRead
         val w = m.shuffleWriteMetrics.bytesWritten
+        val rr = m.shuffleReadMetrics.recordsRead
+        val wr = m.shuffleWriteMetrics.recordsWritten
         if (r > 0 || w > 0)
-          stages.add(f"shufR $r%10d  shufW $w%10d  tasks ${si.numTasks}%4d  ${si.name}")
+          stages.add(f"shufR $r%10d B $rr%8d rec  shufW $w%10d B $wr%8d rec  tasks ${si.numTasks}%4d  ${si.name}")
       }
     })
 

@@ -57,10 +57,10 @@ object Dedup {
     * gram lambda reads it (see [[shinglesOf]]), and the input is repartitioned
     * BEFORE the expansion — document tables are small on disk relative to
     * their shingle volume, so without this a compact parquet file arrives as
-    * one input partition and the ~100x expansion runs on one core. Callers
-    * that share this subplan (e.g. [[jaccardPairs]]'s count + posting-list
-    * sides) issue the IDENTICAL call so ReuseExchange serves both from one
-    * shuffle.
+    * one input partition and the ~100x expansion runs on one core. An
+    * operator that reads the result from several branches materializes it
+    * once rather than relying on ReuseExchange to share the exchange (an
+    * AQE race — see [[shinglePairCounts]]).
     */
   def shingleArrays(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
     val parallelism = df.sparkSession.sessionState.conf.numShufflePartitions
@@ -913,18 +913,16 @@ object Dedup {
       .distinct()
   }
 
-  /** n-gram Jaccard similarity pairs above `threshold`, via the shingle
-    * inverted index: pairs sharing ≥1 shingle get their intersection counted
-    * by a self-join on shingle (keyed shuffle, not n²), then
-    * `|A∩B| / (|A|+|B|-|A∩B|)`.
-    */
-  /** n-gram Jaccard with an IN-PLAN stop-shingle cap: shingles whose document
-    * frequency exceeds `maxDf` are removed from the shingle space entirely
-    * (both intersection AND union counts — standard stop-word-filtered
+  /** n-gram Jaccard similarity pairs above `threshold`:
+    * `|A∩B| / (|A|+|B|-|A∩B|)` over each document's distinct word n-gram
+    * shingles, with an IN-PLAN stop-shingle cap. Shingles whose document
+    * frequency exceeds `maxDf` leave the shingle space entirely (both the
+    * intersection AND the union counts — standard stop-word-filtered
     * Jaccard), so no posting list ever exceeds `maxDf` ids and the pair
     * expansion is bounded by C(maxDf, 2) per shingle. A df-1000+ shingle is
     * boilerplate (headers, license text) that contributes no discrimination
-    * anyway.
+    * anyway. Pairs come from a shingle inverted index (keyed shuffles, never
+    * n²); the plan is [[shinglePairCounts]]'s.
     */
   def jaccardPairs(
       df: DataFrame,
@@ -933,40 +931,6 @@ object Dedup {
       n: Int = 3,
       threshold: Double = 0.3,
       maxDf: Int = 1000): DataFrame = {
-    // Inverted-index aggregation instead of a self-join: group the shingle
-    // table by shingle, DROP singleton postings (a shingle in one document
-    // can never witness a pair — the overwhelming majority in natural text)
-    // and stop-shingles (df > maxDf), and expand each surviving posting
-    // list into its local pairs. The df count is a window count over the
-    // shingle partitioning, never a list, so no unbounded aggregation state
-    // exists anywhere.
-    //
-    // Stop-shingle handling stays shingle-KEYED, never a broadcast: the
-    // number of df>maxDf shingles GROWS with corpus size (Zipf — at web
-    // scale millions of boilerplate n-grams clear any fixed cap), so pinning
-    // a broadcast build side would trade away the bounded-memory guarantee
-    // this operator exists for.
-    //
-    // Plan-determinism note (round 14, diagnosed on `x_corpus_pipeline`):
-    // the previous shape — posting table JOINs its own df-count aggregate,
-    // the join output read by the kept/stop branches — relied on
-    // ReuseExchange to serve the posting exchange to its multiple
-    // consumers. Under AQE that reuse is a RACE: canonically-equal query
-    // stages submitted concurrently each miss the stage cache and execute
-    // independently, so per-stage dumps showed the 2.5MB posting exchange
-    // re-executed 3× on one pass and 8× on the next WITHIN ONE JVM —
-    // nondeterministic shuffle volume (18.7MB vs 39.7MB for the whole
-    // pipeline) for a fixed plan+data. The fix is structural, not a hint:
-    // (a) df comes from `count() OVER (PARTITION BY shingle)` IN the
-    // posting exchange's own partitioning — one shingle-keyed exchange
-    // total, no second agg exchange, no join; (b) per-doc totals `_n_all`
-    // ride the explode so the doc-count side needs no second tokenize
-    // subplan; (c) the resulting (id, _n_all, shingle, _df) frame is
-    // materialized ONCE (eager localCheckpoint — the same stage-boundary
-    // pattern the pipeline gates use; at 100 TB this is the parquet write
-    // between curation stages) and every downstream branch reads the fixed
-    // RDD. Post-fix the whole pipeline's shuffle bytes are identical
-    // across passes and JVMs.
     val (inter, cnt) = shinglePairCounts(df, idCol, textCol, n, maxDf)
     inter
       .join(cnt.select(col(idCol).as("id_a"), col("n_sh").as("n_a")), "id_a")
@@ -980,16 +944,13 @@ object Dedup {
   /** Shared pair machinery for [[jaccardPairs]]/[[containmentPairs]]:
     * returns (per-pair intersection counts `(id_a, id_b, n_inter)`, per-doc
     * kept-shingle counts `(id, n_sh)`) over the df-capped distinct-shingle
-    * space. All the design notes above (inverted index, singleton drop,
-    * keyed — never broadcast — stop-shingle handling, window df count in
-    * the posting partitioning, eager single materialization for plan
-    * determinism) live here. NOTE: calling this triggers one Spark job
-    * (the posting-table materialization); both public wrappers are
-    * therefore eager, like [[connectedComponents]].
+    * space. NOTE: calling this triggers one Spark job (the posting-table
+    * materialization); both public wrappers are therefore eager, like
+    * [[connectedComponents]].
     *
-    * `cnt` rows exist only for docs with ≥1 shingle — sufficient, because
-    * its sole consumers are inner joins from `inter` ids, and an id can
-    * appear in a pair only if it contributed at least one posting row.
+    * `cnt` rows exist only for docs with ≥1 shingle of df > 1 — sufficient,
+    * because its sole consumers are inner joins from `inter` ids, and an id
+    * can appear in a pair only if it shares at least one shingle.
     */
   private def shinglePairCounts(
       df: DataFrame,
@@ -997,12 +958,56 @@ object Dedup {
       textCol: String,
       n: Int,
       maxDf: Int): (DataFrame, DataFrame) = {
+    // Inverted-index aggregation instead of a self-join: group the shingle
+    // table by shingle, drop stop-shingles (df > maxDf), and expand each
+    // surviving posting list into its local pairs. The df count is a window
+    // count over the shingle partitioning, never a list, so no unbounded
+    // aggregation state exists anywhere.
+    //
+    // Stop-shingle handling stays shingle-KEYED, never a broadcast: the
+    // number of df>maxDf shingles GROWS with corpus size (Zipf — at web
+    // scale millions of boilerplate n-grams clear any fixed cap), so pinning
+    // a broadcast build side would trade away the bounded-memory guarantee
+    // this operator exists for.
+    //
+    // Plan-determinism note (round 14, diagnosed on `x_corpus_pipeline`):
+    // an earlier shape — posting table JOINs its own df-count aggregate,
+    // the join output read by the kept/stop branches — relied on
+    // ReuseExchange to serve the posting exchange to its multiple
+    // consumers. Under AQE that reuse is a RACE: canonically-equal query
+    // stages submitted concurrently each miss the stage cache and execute
+    // independently, so per-stage dumps showed the 2.5MB posting exchange
+    // re-executed 3× on one pass and 8× on the next WITHIN ONE JVM —
+    // nondeterministic shuffle volume for a fixed plan+data. The fix is
+    // structural, not a hint: (a) df comes from
+    // `count() OVER (PARTITION BY shingle)` IN the posting exchange's own
+    // partitioning — one shingle-keyed exchange, no agg exchange, no join;
+    // (b) per-doc totals `_n_all` ride the explode so the doc-count side
+    // needs no second tokenize subplan; (c) the resulting
+    // (id, _n_all, shingle, _df) frame is materialized ONCE (eager
+    // localCheckpoint — at 100 TB the parquet write between curation
+    // stages) and both branches read the fixed RDD. Since then the shuffle
+    // bytes are identical across passes and JVMs.
+    //
+    // Prune BEFORE the checkpoint (evidence: plans/r17/): under AQE a
+    // localCheckpoint drops the output partitioning (the checkpointed scan
+    // reports UnknownPartitioning(0)), so every keyed operation on it —
+    // the posting groupBy(shingle) as much as the per-doc groupBy(id) —
+    // re-shuffles whatever it reads. Only rows with df > 1 go in. A
+    // singleton posting (~92% of the rows on the curation benchmark's
+    // corpus, 74% on the sf0.01 gate corpus) can never witness a pair.
+    // Dropping it keeps `n_sh = _n_all − #stop` exact: `_n_all` rides every
+    // row, and a stop shingle has df > maxDf ≥ 1, so every stop row
+    // survives the prune. For maxDf ≤ 0 `n_sh` overcounts, but no posting
+    // survives the cap, so `inter` — and every output — is empty either
+    // way. Every surviving posting list has ≥ 2 ids.
     val withDf = shingleArrays(df, idCol, textCol, n)
       .select(col(idCol), size(col("shingles")).as("_n_all"),
         explode_outer(col("shingles")).as("shingle"))
       .where(col("shingle").isNotNull) // see shingleTable: InferFiltersFromGenerate trap
       .select(col(idCol), col("_n_all"), col("shingle"),
         count(lit(1)).over(Window.partitionBy("shingle")).as("_df"))
+      .where(col("_df") > 1)
       .localCheckpoint(true)
     val cnt = withDf.groupBy(col(idCol))
       .agg((first(col("_n_all")).cast("long") -
@@ -1010,7 +1015,6 @@ object Dedup {
     val inter = withDf.where(col("_df") <= maxDf)
       .select(col(idCol), col("shingle"))
       .groupBy(col("shingle")).agg(collect_list(col(idCol)).as("ids"))
-      .where(size(col("ids")) > 1)
       .select(explode(col("ids")).as("id_a"), col("ids"))
       .select(col("id_a"), explode(col("ids")).as("id_b"))
       .where(col("id_a") < col("id_b"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Similarity}
@@ -82,7 +83,9 @@ class DedupSimilaritySpec extends SparkSpec {
     val (a, b, cab, cba) = cont.head
     assert((a, b) == (20L, 21L))
     assert(cab == 1.0, s"fragment→host containment must be exactly 1, got $cab")
-    assert(cba < 0.3, s"host→fragment containment must stay small, got $cba")
+    // The host's 37 shingles include 30 that no other doc has: they leave
+    // the posting table but must still count in its n_sh.
+    assert(cba == 7.0 / 37, s"host→fragment containment must be 7/37, got $cba")
   }
 
   test("containment respects the df cap through the shared pair machinery") {
@@ -97,6 +100,73 @@ class DedupSimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double, Double)].collect()
     assert(capped.map(t => (t._1, t._2)).toSet == Set((10L, 11L)))
     assert(capped.head._3 == 1.0 && capped.head._4 == 1.0)
+  }
+
+  /** In-memory reference for the shingle-space pair ops: distinct word
+    * n-shingles per doc, stop shingles (df > maxDf) removed from every set,
+    * and one `(n_inter, n_a, n_b)` per pair sharing ≥1 kept shingle.
+    */
+  private def bruteForcePairs(corpus: Seq[(Long, String)], n: Int, maxDf: Int)
+      : Map[(Long, Long), (Int, Int, Int)] = {
+    val sets = corpus.map { case (id, t) =>
+      id -> t.trim.split("\\s+").toSeq.sliding(n).filter(_.size == n).map(_.mkString(" ")).toSet
+    }
+    val docFreq = sets.flatMap(_._2.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+    val kept = sets.map { case (id, s) => id -> s.filter(docFreq(_) <= maxDf) }
+    (for {
+      (a, sa) <- kept; (b, sb) <- kept if a < b
+      i = (sa & sb).size if i > 0
+    } yield (a, b) -> ((i, sa.size, sb.size))).toMap
+  }
+
+  test("jaccard and containment pairs equal an in-memory brute force for several maxDf") {
+    // Small vocabulary so shingles recur at many document frequencies, plus
+    // planted copies and docs too short to shingle.
+    val rnd = new scala.util.Random(11)
+    val vocab = Vector("a", "b", "c", "d", "e", "f")
+    val base = (0L until 40L).map(id => id -> Seq.fill(1 + rnd.nextInt(14))(vocab(rnd.nextInt(6))).mkString(" "))
+    val corpus = base ++ base.take(5).map { case (id, t) => (id + 100L) -> t }
+    val d = corpus.toDF("doc_id", "text")
+    for (maxDf <- Seq(1, 2, 1000)) {
+      val want = bruteForcePairs(corpus, 3, maxDf)
+      val jac = Dedup.jaccardPairs(d, "doc_id", "text", n = 3, threshold = 0.0, maxDf = maxDf)
+        .as[(Long, Long, Double)].collect().map(t => (t._1, t._2) -> t._3).toMap
+      assert(jac == want.map { case (k, (i, na, nb)) => k -> i.toDouble / (na + nb - i) },
+        s"jaccard, maxDf = $maxDf")
+      val cont = Dedup.containmentPairs(d, "doc_id", "text", n = 3, threshold = 0.0, maxDf = maxDf)
+        .as[(Long, Long, Double, Double)].collect().map(t => (t._1, t._2) -> ((t._3, t._4))).toMap
+      assert(cont == want.map { case (k, (i, na, nb)) => k -> ((i.toDouble / na, i.toDouble / nb)) },
+        s"containment, maxDf = $maxDf")
+      if (maxDf == 1) assert(want.isEmpty)
+      else assert(want.nonEmpty, s"fixture has no pair at maxDf = $maxDf")
+    }
+  }
+
+  test("jaccard pairs shuffle singleton shingle postings once") {
+    // No two docs share a shingle, so every posting is a singleton. The plan
+    // writes the doc exchange and the shingle exchange in full; nothing after
+    // the df window may re-send the singleton rows.
+    val nDocs = 50
+    val words = 10
+    val d = (0 until nDocs).map(i => (i.toLong, (0 until words).map(j => s"d${i}w$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    val shingleRows = nDocs * (words - 2)
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) written.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    org.apache.spark.sql.graft.Shim.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val pairs =
+      try {
+        val out = Dedup.jaccardPairs(d, "doc_id", "text", n = 3, threshold = 0.0).collect()
+        org.apache.spark.sql.graft.Shim.drainListenerBus(spark.sparkContext)
+        out
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(pairs.isEmpty)
+    assert(written.get <= nDocs + shingleRows + 8,
+      s"wrote ${written.get} shuffle records for $nDocs docs and $shingleRows shingle rows")
   }
 
   test("perceptual hashes are brightness-shift invariant; unrelated images differ; corrupt degrades") {
