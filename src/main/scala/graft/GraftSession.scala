@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with graft's scale-oriented defaults.
@@ -23,11 +24,11 @@ object GraftSession {
   def defaultShufflePartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .master(master)
-      .appName("graft")
+  /** `master` is a fallback: see [[masterToSet]]. */
+  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder = {
+    val b = SparkSession.builder()
+    masterToSet(new SparkConf(), master).foreach(b.master)
+    b.appName("graft")
       .config("spark.sql.shuffle.partitions", defaultShufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -44,6 +45,15 @@ object GraftSession {
       // HDFS-backed in-memory provider is faster for the small local gates.
       .config("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
       .config("spark.ui.enabled", "false")
+  }
+
+  /** The master [[builder]] sets: `fallback`, unless `configured` already
+    * names one. `spark-submit --master` and `spark-defaults.conf` arrive as
+    * the `spark.master` system property, which a master set in code would
+    * override — a submitted GraftMain would then run local on the driver.
+    */
+  private[graft] def masterToSet(configured: SparkConf, fallback: String): Option[String] =
+    if (configured.contains("spark.master")) None else Some(fallback)
 
   /** Session for the library entry points (GraftMain/CurateMain). When a
     * session already EXISTS (an embedding host — Bench, Verify, a notebook,

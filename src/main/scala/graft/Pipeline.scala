@@ -42,9 +42,11 @@ final case class ProcessSummary(
 /** The reference's `Mapping` (`/root/reference/src/mapping.py:13-65`) as a
   * plan compiler: one validated [[PipelineConfig]] + a message frame becomes
   * ONE declarative DataFrame plan (envelope → payload ops → k6 mask →
-  * transform select-list → dedup anti-join → sink append). Catalyst fuses the
-  * projection chain into a single codegen stage; the only shuffles are the
-  * J2 anti-join (keyed) and none at all when dedup keys are absent.
+  * transform select-list → dedup anti-join → sink append). The envelope
+  * decodes each message once, in a projection the ones above do not
+  * re-inline ([[operators.Envelope]]: CSE does not reach into `CASE WHEN`
+  * branches); on JSON input these run outside whole-stage codegen. The only
+  * shuffles are the J2 anti-join (keyed) and none when dedup keys are absent.
   *
   * `$$BATCH_TIME` is frozen here, at plan build, and is therefore constant
   * across every micro-batch of a run (T1 parity,

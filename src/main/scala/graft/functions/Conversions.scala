@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /** Scalar conversion registry — graft's equivalent of the reference's
   * `TRANSFORMS` table (`/root/reference/src/transform.py:112-119`).
   *
-  * Every function here is a composition of built-in, whole-stage-codegen'd
-  * Catalyst expressions — no UDFs, no interpreted fallbacks — so transform
-  * select-lists stay inside a single codegen stage at any scale.
+  * Every function here composes Catalyst expressions (built-in or graft's
+  * own) — no UDFs. A transform select-list collapses into the envelope's
+  * select (above its decode-once projection, [[graft.operators.Envelope]]),
+  * which on JSON input runs outside whole-stage codegen.
   *
   * Timezone model: the reference emits naive Europe/Oslo wall-clock datetimes
   * (`_adjust_timezone`, `/root/reference/src/transform.py:8-21`). graft

@@ -27,11 +27,24 @@ import graft.functions.Conversions
   * `kafka_key, kafka_timestamp, kafka_offset, kafka_partition, kafka_topic,
   * kafka_hash, kafka_message[, kafka_schema_id], payload`.
   *
-  * Everything here is a single projection — no shuffle, fully codegen'd; the
-  * whole deserialize→drop→flag→predicate chain fuses into one stage exactly
-  * like the reference's hand-fused per-message loop (§4 of SURVEY.md).
+  * Two projections, no shuffle: [[decodeOnce]] binds the decoded value, and
+  * the envelope `select` reads it in the error flag, F1/F2 ops, F3
+  * predicates and serializer — one decode per message, like the reference's
+  * loop (`src/kafka_source.py:102-119`). A single projection would paste a
+  * decoder copy into each consumer (32 `from_json` per row on the
+  * benchmark's F1/F2/F3 config): common-subexpression elimination does not
+  * look into `CASE WHEN` branches. `CollapseProject` keeps the two apart, the decoder
+  * being non-cheap and referenced more than once. On JSON input neither runs
+  * whole-stage codegen'd: `from_json` and array `transform` lambdas are
+  * interpreted (`CodegenFallback`).
   */
 object Envelope {
+
+  private val Decoded = "_graft_decoded"
+
+  /** Bind `decoder` in a projection of its own; see the object doc. */
+  private def decodeOnce(raw: DataFrame, decoder: Column): (DataFrame, Column) =
+    (raw.withColumn(Decoded, decoder), col(Decoded))
 
   /** S3: key deserializer (`/root/reference/src/kafka_source.py:74-82`). */
   def decodeKey(key: Column, decoder: KeyDecoder): Column = decoder match {
@@ -56,8 +69,8 @@ object Envelope {
     // (`/root/reference/src/kafka_source.py:309-323`) without failing tasks.
     val corruptField = "_graft_corrupt"
     val schemaWithCorrupt = payloadSchema.add(StructField(corruptField, StringType))
-    val parsed = from_json(col("value").cast(StringType), schemaWithCorrupt,
-      Map("columnNameOfCorruptRecord" -> corruptField))
+    val (in, parsed) = decodeOnce(raw, from_json(col("value").cast(StringType), schemaWithCorrupt,
+      Map("columnNameOfCorruptRecord" -> corruptField)))
     val isCorrupt = col("value").isNotNull && parsed.getField(corruptField).isNotNull
     val payloadClean = parsed.dropFields(corruptField)
     val resultSchema = PayloadOps.resultSchema(
@@ -76,7 +89,7 @@ object Envelope {
       else to_json(payload)
     val message = when(col("value").isNull || isCorrupt, lit(null).cast(StringType))
       .otherwise(serialized)
-    project(raw, cfg, payload, applyMessageFilters(message, payload, cfg.messageFilters),
+    project(in, cfg, payload, applyMessageFilters(message, payload, cfg.messageFilters),
       schemaId = None, error = Some(isCorrupt))
   }
 
@@ -98,16 +111,16 @@ object Envelope {
     */
   def avro(raw: DataFrame, cfg: SourceConfig, writerSchemaJson: String, payloadSchema: StructType): DataFrame = {
     val datum = expr("substring(value, 6, 2147483647)") // payload after magic byte + schema id
-    val payloadRaw = graft.sources.ConfluentAvro.decode(datum, writerSchemaJson, payloadSchema)
+    // Strict: a corrupt datum throws in the decode projection, failing the task.
+    val (in, payloadRaw) = decodeOnce(raw, graft.sources.ConfluentAvro.decode(datum, writerSchemaJson, payloadSchema))
     val payload = PayloadOps(payloadRaw, payloadSchema, cfg.messageFieldsFilter, cfg.flagFieldConfig, cfg.keypathSeparator)
     val message = when(col("value").isNull, lit(null).cast(StringType))
       .otherwise(serializeStruct(payload, payloadSchema, cfg))
-    val env = project(raw, cfg, payload, applyMessageFilters(message, payload, cfg.messageFilters),
+    project(in, cfg, payload, applyMessageFilters(message, payload, cfg.messageFilters),
       schemaId = Some(Conversions.schemaId(col("value"))),
       // Reference hashes the Avro *payload* bytes (after the 5-byte header),
       // not the whole message (`src/kafka_source.py:150`).
       hashOver = Some(datum))
-    env
   }
 
   /** S5 with per-message schema-id dispatch — the production shape for any
@@ -121,7 +134,7 @@ object Envelope {
     */
   def avroMulti(raw: DataFrame, cfg: SourceConfig, schemasById: Map[Int, String], payloadSchema: StructType): DataFrame = {
     val datum = expr("substring(value, 6, 2147483647)")
-    val payloadRaw = graft.sources.ConfluentAvro.decodeMulti(col("value"), schemasById, payloadSchema)
+    val (in, payloadRaw) = decodeOnce(raw, graft.sources.ConfluentAvro.decodeMulti(col("value"), schemasById, payloadSchema))
     val isError = col("value").isNotNull && payloadRaw.isNull
     val resultSchema = PayloadOps.resultSchema(
       payloadSchema, cfg.messageFieldsFilter, cfg.flagFieldConfig, cfg.keypathSeparator)
@@ -129,7 +142,7 @@ object Envelope {
       .otherwise(PayloadOps(payloadRaw, payloadSchema, cfg.messageFieldsFilter, cfg.flagFieldConfig, cfg.keypathSeparator))
     val message = when(col("value").isNull || isError, lit(null).cast(StringType))
       .otherwise(serializeStruct(payload, payloadSchema, cfg))
-    project(raw, cfg, payload, applyMessageFilters(message, payload, cfg.messageFilters),
+    project(in, cfg, payload, applyMessageFilters(message, payload, cfg.messageFilters),
       schemaId = Some(Conversions.schemaId(col("value"))),
       hashOver = Some(datum),
       error = Some(isError))
@@ -185,7 +198,7 @@ object Envelope {
       when(hit, message).otherwise(lit(null).cast(StringType))
     }
 
-  /** S7: the envelope projection proper. */
+  /** S7: the envelope projection proper; its select-list drops [[Decoded]]. */
   private def project(
       raw: DataFrame,
       cfg: SourceConfig,

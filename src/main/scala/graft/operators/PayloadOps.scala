@@ -14,9 +14,9 @@ import org.apache.spark.sql.types._
   * element when a path segment crosses an array of structs, at any depth.
   * Paths that do not resolve are no-ops (reference pops with default).
   *
-  * Scale note: the generated expressions are per-row, shuffle-free, and stay
-  * inside whole-stage codegen — the config compiles once at plan build, and
-  * the same plan serves 60k rows or 100 TB.
+  * Scale note: per-row and shuffle-free — the config compiles once at plan
+  * build, and the same plan serves 60k rows or 100 TB. Array-crossing paths
+  * compile to interpreted `transform` lambdas (no whole-stage codegen).
   */
 object PayloadOps {
 

@@ -2,7 +2,8 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs, ScalaUDF}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,8 +14,10 @@ import graft.sources.{ConfluentAvro, MessageSource}
 class EnvelopeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def sha(s: String): String =
-    MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  private def sha256(b: Array[Byte]): String =
+    MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+
+  private def sha(s: String): String = sha256(s.getBytes("UTF-8"))
 
   private val schema = StructType(Seq(StructField("k", LongType)))
 
@@ -186,5 +189,111 @@ class EnvelopeSpec extends SparkSpec {
     assert(!rows(1).getAs[Boolean]("kafka_error"))     // healthy sibling decodes
     assert(rows(1).getAs[Row]("payload").getAs[String]("name") == "fin")
     assert(rows(0).isNullAt(rows(0).fieldIndex("kafka_message")))
+  }
+
+  // Benchmark-shaped payload: nested structs, an array of structs and an
+  // array of arrays of structs, F1 drops and F2 flags at the top level and
+  // across arrays, two F3 filters — every consumer of the decoded value in
+  // play, so a decoder pasted into each consumer would show up many times.
+  private val nestedSchema = StructType.fromDDL(
+    "id BIGINT, enum STRING, drop STRING, person STRUCT<id: BIGINT, name: STRING>, " +
+      "nested STRUCT<key: STRING, k2: STRING>, items ARRAY<STRUCT<index: STRING, tag: STRING>>, " +
+      "deep ARRAY<STRUCT<inner: ARRAY<STRUCT<key: STRING, other: STRING>>>>")
+  private val opsCfg = SourceConfig(topic = "t", keypathSeparator = "/",
+    messageFieldsFilter = Seq("drop", "deep/inner/key"),
+    flagFieldConfig = Seq("nested", "items/index"),
+    messageFilters = Seq(MessageFilter("enum", "A"), MessageFilter("enum", "B")))
+
+  private val avroV1 =
+    """{"type":"record","name":"ev","fields":[
+      |{"name":"id","type":"long"},{"name":"name","type":"string"}]}""".stripMargin
+  private val avroSchema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+
+  /** Confluent wire bytes of `(id, name)` under `schemaId`, materialized so
+    * the test frames hold no encoder UDF of their own.
+    */
+  private def avroBytes(id: Long, name: String, schemaId: Int): Array[Byte] =
+    Seq((id, name)).toDF("id", "name")
+      .select(ConfluentAvro.encode(struct(col("id"), col("name")), avroV1, schemaId))
+      .head().getAs[Array[Byte]](0)
+
+  /** `df` behind a scan-like leaf. Over a bare LocalRelation the optimizer
+    * evaluates a decode projection itself (ConvertToLocalRelation), so
+    * neither the plan nor the executors would see the decoder.
+    */
+  private def scanned(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  private def countInOptimizedPlan(df: DataFrame)(pf: PartialFunction[Expression, Expression]): Int =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect(pf))).size
+
+  test("decode once: the optimized plan of every decoding envelope holds exactly one decoder") {
+    val rawJson = scanned(raw(("""{"id": 1, "enum": "A"}""", 1L)))
+    val fromJsons = countInOptimizedPlan(Envelope.json(rawJson, opsCfg, nestedSchema)) {
+      case e: JsonToStructs => e
+    }
+    val rawAvro = scanned(MessageSource.fromRows(spark,
+      Seq((null, avroBytes(1L, "A", 1), "t", 0, 1L, 1700000000000L))))
+    val avroCfg = opsCfg.copy(schemaMode = SchemaMode.Avro, messageFieldsFilter = Seq("name"),
+      flagFieldConfig = Nil, messageFilters = Seq(MessageFilter("id", "1"), MessageFilter("id", "2")))
+    val udfs = (df: DataFrame) => countInOptimizedPlan(df) { case u: ScalaUDF => u }
+    val single = udfs(Envelope.avro(rawAvro, avroCfg, avroV1, avroSchema))
+    val multi = udfs(Envelope.avroMulti(rawAvro, avroCfg, Map(1 -> avroV1), avroSchema))
+    assert((fromJsons, single, multi) == ((1, 1, 1)),
+      s"decoders per row: json from_json=$fromJsons, avro decode=$single, avroMulti decode=$multi")
+    // The helper column stays internal: the output schema is the envelope's.
+    assert(Envelope.json(rawJson, opsCfg, nestedSchema).columns.toSeq == Seq(
+      "kafka_key", "kafka_timestamp", "kafka_offset", "kafka_partition", "kafka_topic",
+      "kafka_hash", "kafka_message", "kafka_error", "payload"))
+  }
+
+  test("JSON envelope over one mixed frame: valid, malformed, NULL and F3-rejected rows with F1/F2 over arrays") {
+    val malformed = """{"id": 3, "enum": "A", """
+    val env = Envelope.json(scanned(raw(
+      ("""{"id": 1, "enum": "A", "drop": "x", "person": {"id": 10, "name": "p"},
+         |"nested": {"key": "k", "k2": "v"},
+         |"items": [{"index": "i", "tag": "t0"}, {"index": null, "tag": "t1"}],
+         |"deep": [{"inner": [{"key": "kk", "other": "o1"}, {"other": "o2"}]}]}""".stripMargin, 1L),
+      ("""{"id": 2, "enum": "B", "nested": null, "items": [], "deep": []}""", 2L),
+      (malformed, 3L),
+      (null, 4L),
+      ("""{"id": 5, "enum": "C", "drop": "y", "items": [{"index": "x", "tag": "t"}]}""", 5L))),
+      opsCfg, nestedSchema)
+    val rows = env.orderBy("kafka_offset").collect()
+    val messages = rows.map(_.getAs[String]("kafka_message")).toSeq
+    assert(messages == Seq(
+      """{"id":1,"enum":"A","person":{"id":10,"name":"p"},"nested":1,""" +
+        """"items":[{"index":1,"tag":"t0"},{"index":0,"tag":"t1"}],"deep":[{"inner":[{"other":"o1"},{"other":"o2"}]}]}""",
+      """{"id":2,"enum":"B","nested":0,"items":[],"deep":[]}""",
+      null, null, null))
+    assert(rows.map(_.getAs[Boolean]("kafka_error")).toSeq == Seq(false, false, true, false, false))
+    assert(rows.map(_.isNullAt(rows(0).fieldIndex("payload"))).toSeq == Seq(false, false, true, true, false))
+    assert(rows(2).getAs[String]("kafka_hash") == sha(malformed))
+    assert(rows(3).getAs[String]("kafka_hash") == null)
+    // The F3-rejected row keeps its payload with F1/F2 applied.
+    val rejected = rows(4).getAs[Row]("payload")
+    assert(rejected.getAs[Long]("id") == 5L)
+    assert(!rejected.schema.fieldNames.contains("drop"))
+    assert(rejected.getAs[Int]("nested") == 0)
+    assert(rejected.getSeq[Row](rejected.fieldIndex("items")).map(_.getAs[Int]("index")) == Seq(1))
+    val first = rows(0).getAs[Row]("payload")
+    assert(first.getSeq[Row](first.fieldIndex("items")).map(_.getAs[Int]("index")) == Seq(1, 0))
+  }
+
+  test("Avro multi-schema envelope over one mixed frame: registered id, unregistered id, NULL value") {
+    val good = avroBytes(1L, "a", 1)
+    val stray = avroBytes(2L, "b", 777)
+    val env = Envelope.avroMulti(scanned(MessageSource.fromRows(spark, Seq(
+        (null, good, "t", 0, 1L, 1700000000001L),
+        (null, stray, "t", 0, 2L, 1700000000002L),
+        (null, null, "t", 0, 3L, 1700000000003L)))),
+      SourceConfig(topic = "t", schemaMode = SchemaMode.Avro), Map(1 -> avroV1), avroSchema)
+    val rows = env.orderBy("kafka_offset").collect()
+    assert(rows.map(_.getAs[String]("kafka_message")).toSeq == Seq("""{"id":1,"name":"a"}""", null, null))
+    assert(rows.map(_.getAs[Boolean]("kafka_error")).toSeq == Seq(false, true, false))
+    assert(rows.map(_.isNullAt(rows(0).fieldIndex("payload"))).toSeq == Seq(false, true, true))
+    assert(rows.map(r => Option(r.getAs[Integer]("kafka_schema_id")).map(_.toInt)).toSeq ==
+      Seq(Some(1), Some(777), None))
+    assert(rows(0).getAs[String]("kafka_hash") == sha256(good.drop(5)))
+    assert(rows(2).getAs[String]("kafka_hash") == null)
   }
 }
